@@ -12,13 +12,19 @@ import org.apache.spark.sql.functions._
   *
   * Commit protocol (north rule "checkpointed resume"):
   *  - work unit = url-hash bucket (stable across runs/partitionings — NEVER
-  *    Spark task ids); waves of `bucketsPerWave` buckets run as one Spark
-  *    job each;
+  *    Spark task ids); waves of `bucketsPerWave` buckets are extracted
+  *    and committed together;
   *  - a wave writes its results parquet (partitioned by bucket for
-  *    downstream partition pruning), then its lineage parquet, then one
-  *    marker file per bucket — markers last, so a crash mid-wave leaves no
-  *    marker and the rerun redoes the whole wave (at-least-once, idempotent
-  *    because output paths are keyed by wave id and overwritten);
+  *    downstream partition pruning) and counts its lineage in the same
+  *    pass: the per-bucket rows/completed/failed/wall_ms are aggregated in
+  *    the write's result stage, once per partition (retried attempts never
+  *    double-count), with no read-back of the written files
+  *    ([[LineageTable.writeWithLineage]]). Then one small lineage parquet,
+  *    then one marker file per bucket carrying the same counts — markers
+  *    last, so a crash mid-wave leaves no marker and the rerun redoes the
+  *    whole wave (at-least-once, idempotent because output paths are keyed
+  *    by wave id and overwritten). A wave costs three Spark jobs: extract +
+  *    shuffle map, data write, lineage write;
   *  - rerunning the same (table, runId) skips all marked buckets: a killed
   *    job never re-extracts completed partitions;
   *  - after the last wave, a snapshot manifest is committed atomically.
@@ -72,7 +78,11 @@ object ExtractJob {
       appendSnapshot: Boolean = false,
   )
 
-  final case class Report(snapshotId: Long, wavesRun: Int, bucketsSkipped: Int, bucketsRun: Int)
+  /** `rows`/`completed`/`failed` total the run's markers, so they cover
+    * every bucket of the run, including those a killed earlier attempt
+    * committed. */
+  final case class Report(snapshotId: Long, wavesRun: Int, bucketsSkipped: Int, bucketsRun: Int,
+                          rows: Long, completed: Long, failed: Long)
 
   /** Hook for tests: invoked after each committed wave (wave index). */
   type WaveHook = Int => Unit
@@ -202,28 +212,22 @@ object ExtractJob {
 
       val slots = spark.sparkContext.defaultParallelism
       val filesPerBucket = math.max(1, slots * 2 / math.max(waveBuckets.size, 1))
-      results
-        .withColumn("_salt", pmod(xxhash64($"task_id"), lit(filesPerBucket)))
-        .repartition(waveBuckets.size * filesPerBucket, $"_bucket", $"_salt")
-        .drop("_salt")
-        .write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
-
-      // lineage from the written files (no recompute, columnar prune);
-      // explicit schema: an empty wave writes only _SUCCESS
-      val written = spark.read.schema(results.schema).parquet(dataDir)
-      val lineage = LineageTable.lineageFor(written, cfg.runId, waveId)
-      lineage.write.mode(SaveMode.Overwrite).parquet(lineageDir)
-
-      val stats = lineage.select($"_bucket", $"rows", $"completed", $"failed", $"wall_ms")
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+      // the repartition stays BELOW the lineage observation, which must run
+      // in the write's result stage (see LineageTable.writeWithLineage)
+      val stats = LineageTable.writeWithLineage(
+        results
+          .withColumn("_salt", pmod(xxhash64($"task_id"), lit(filesPerBucket)))
+          .repartition(waveBuckets.size * filesPerBucket, $"_bucket", $"_salt")
+          .drop("_salt"),
+        dataDir, lineageDir, cfg.runId, waveId)
 
       // markers LAST — only now is the wave durable
       waveBuckets.foreach { b =>
-        val (rows, completedN, failedN, wallMs) = stats.getOrElse(b, (0L, 0L, 0L, 0L))
+        val s = stats.getOrElse(b, LineageTable.BucketStats(0L, 0L, 0L, 0L))
         table.markDone(cfg.runId, b, Map(
           "bucket" -> b, "run_id" -> cfg.runId, "wave" -> waveId,
           "data_dir" -> dataDir, "lineage_dir" -> lineageDir,
-          "rows" -> rows, "completed" -> completedN, "failed" -> failedN, "wall_ms" -> wallMs,
+          "rows" -> s.rows, "completed" -> s.completed, "failed" -> s.failed, "wall_ms" -> s.wallMs,
         ))
       }
       afterWave(waveIdx)
@@ -252,7 +256,8 @@ object ExtractJob {
     // tombstone gone AND data gone, nothing left to rerun).
     // totalRows guards the zero-delta run, whose wave dirs carry only
     // _SUCCESS and would fail parquet schema inference.
-    val totalRows = markers.map(m => String.valueOf(m("rows")).toLong).sum
+    def total(key: String): Long = markers.map(m => String.valueOf(m(key)).toLong).sum
+    val totalRows = total("rows")
     if (dataDirs.nonEmpty && totalRows > 0) {
       val ts = table.tombstones
       if (ts.nonEmpty) {
@@ -275,6 +280,7 @@ object ExtractJob {
     table.deleteRecursively(java.nio.file.Paths.get(stageDir))
     table.clearMarkers(cfg.runId)
 
-    Report(snapId, waves.length, cfg.numBuckets - rerun.size, rerun.size)
+    Report(snapId, waves.length, cfg.numBuckets - rerun.size, rerun.size,
+      totalRows, total("completed"), total("failed"))
   }
 }

@@ -8,6 +8,7 @@ import graft.model._
 import graft.pdf.PdfParser
 import org.apache.spark.sql.{Dataset, SparkSession}
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 /** The per-document conversion pipeline (reference single-task lifecycle,
   * app/tasks.py:36-185) as a typed `Dataset[Page] → mapPartitions →
@@ -164,7 +165,11 @@ object ExtractKernel {
         completed_at = Some(new Timestamp(completed)),
       )
     } catch {
-      case e: Throwable =>
+      // data errors only: a StackOverflowError is the recursive walks
+      // meeting a too-deep tree, i.e. bad input, so it fails the row; OOM,
+      // InterruptedException and other fatal errors propagate, so Spark can
+      // kill the task and a damaged JVM does not carry on
+      case e @ (NonFatal(_) | _: StackOverflowError) =>
         // error envelope (O2): same shape, failed status, nulls elsewhere
         val completed = System.currentTimeMillis()
         ExtractResult(
@@ -199,7 +204,7 @@ object ExtractKernel {
           rows = t.rows,
           markdown = MarkdownSerializer.renderTable(t),
         ))
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) | _: StackOverflowError => None }
     }.flatten
 
   def filenameFromUrl(url: String): String = {

@@ -267,18 +267,11 @@ object StreamingExtract extends Serializable {
       case _ => ()
     }
     val runId = s"$streamRunId-b$batchId"
-    val spark = batch.sparkSession
     val dataDir = s"${table.root}/data/$runId"
     val lineageDir = s"${table.root}/lineage/$runId"
     val results = batch.withColumn("_bucket",
       pmod(xxhash64(col("url")), lit(table.numBuckets)).cast("int"))
-    results.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("_bucket").parquet(dataDir)
-    // lineage from the written files (no kernel recompute, columnar prune);
-    // explicit schema: an empty batch writes only _SUCCESS
-    val written = spark.read.schema(results.schema).parquet(dataDir)
-    graft.table.LineageTable.lineageFor(written, runId, wave = batchId)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(lineageDir)
+    graft.table.LineageTable.writeWithLineage(results, dataDir, lineageDir, runId, wave = batchId)
     table.commitSnapshot(
       table.currentDataDirs :+ dataDir,
       table.currentLineageDirs :+ lineageDir,

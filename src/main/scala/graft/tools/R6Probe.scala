@@ -81,27 +81,6 @@ object R6Probe {
     time("eval full (count)") {
       graft.queries.CurationQueries.qClassifierEval(spark, dir).count()
     }
-    // phrase search A/B: old join+checkpoint shape vs the committed
-    // lead-window shape, same session/window
-    def phraseOld(): Unit = {
-      val phrase = d.where(col("doc_id") === 1)
-        .select(expr("slice(filter(split(lower(text), '\\\\s+'), x -> x != ''), 6, 3)").as("p"))
-        .collect()(0).getSeq[String](0)
-      val Seq(w1, w2, w3) = phrase.toSeq
-      val toks = d
-        .select(col("doc_id"),
-          posexplode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))))
-        .toDF("doc_id", "pos", "word")
-        .where(col("word").isin(w1, w2, w3))
-        .localCheckpoint(true) // eagerCheckpoint's local branch
-      val t1 = toks.where(col("word") === w1).select(col("doc_id"), col("pos"))
-      val t2 = toks.where(col("word") === w2).select(col("doc_id"), (col("pos") - 1).as("pos"))
-      val t3 = toks.where(col("word") === w3).select(col("doc_id"), (col("pos") - 2).as("pos"))
-      t1.join(t2, Seq("doc_id", "pos")).join(t3, Seq("doc_id", "pos"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_occurrences"))
-        .orderBy(col("doc_id")).count()
-      ()
-    }
     // nb tokenizer predicate A/B: per-token regex vs translate char-set
     time("nbtok rlike (noop)") {
       d.select(col("doc_id"), col("source"),
@@ -115,10 +94,6 @@ object R6Probe {
           w => w =!= lit("") &&
             translate(w, "abcdefghijklmnopqrstuvwxyz0123456789", "") === lit(""))).as("word"))
         .write.format("noop").mode("overwrite").save()
-    }
-    time("phrase OLD (join+ckpt)") { phraseOld() }
-    time("phrase NEW (lead window)") {
-      graft.queries.TrainingDataQueries.qPhraseSearch(spark, dir).count()
     }
     spark.stop()
   }

@@ -4,13 +4,17 @@ import graft.gen.CorpusGen
 import graft.model.ConversionOptions
 import graft.pipeline.ExtractJob
 import graft.table.LineageTable
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import java.nio.file.Files
 
 /** LineageTable + ExtractJob: checkpointed resume (killed job never
   * re-extracts committed buckets), snapshot isolation, lineage stats, GC
   * (SURVEY.md §5.2-5). */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TimeLimits {
+
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private lazy val spark = SparkTestBase.spark
   private val N = 120
@@ -30,11 +34,20 @@ class ResumeSpec extends AnyFunSuite {
     val root = freshRoot()
     val empty = spark.createDataset(Seq.empty[graft.model.Page])(implicitly)
     val cfg = ExtractJob.Config(root, runId = "empty1", numBuckets = 16, bucketsPerWave = 4)
-    val report = ExtractJob.run(spark, empty, cfg) // staging path active (4 waves)
+    // bounded: a lineage observation that never completed would hang here
+    val report = failAfter(Span(180, Seconds)) {
+      ExtractJob.run(spark, empty, cfg) // staging path active (4 waves)
+    }
     assert(report.snapshotId == 1L && report.bucketsRun == 16)
+    assert(report.rows == 0L && report.failed == 0L)
+    val table = new LineageTable(root, 16)
     // a data-less snapshot is a hard error on read, not an obscure parquet one
-    val ex = intercept[IllegalArgumentException](new LineageTable(root, 16).read(spark))
+    val ex = intercept[IllegalArgumentException](table.read(spark))
     assert(ex.getMessage.contains("no data files"))
+    // empty waves still leave readable, schema-carrying lineage
+    val lineage = table.readLineage(spark)
+    assert(lineage.count() == 0 && lineage.columns.toSeq == Seq(
+      "_bucket", "rows", "completed", "failed", "wall_ms", "run_id", "wave", "committed_at"))
   }
 
   test("full run commits a readable snapshot with complete lineage") {
@@ -53,6 +66,8 @@ class ResumeSpec extends AnyFunSuite {
     val lineage = table.readLineage(spark)
     val sums = lineage.groupBy().sum("rows", "completed").collect()(0)
     assert(sums.getLong(0) == distinctUrls && sums.getLong(1) == distinctUrls)
+    // the run report totals the same counts, from the markers
+    assert(report.rows == distinctUrls && report.completed == distinctUrls && report.failed == 0L)
     // every bucket with rows appears exactly once
     assert(lineage.groupBy("_bucket").count().where("count > 1").count() == 0)
     // multi-wave run staged the bucketed input; scratch removed post-snapshot

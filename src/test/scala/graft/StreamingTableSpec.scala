@@ -3,13 +3,17 @@ package graft
 import graft.gen.CorpusGen
 import graft.streaming.StreamingExtract
 import graft.table.LineageTable
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import java.nio.file.Files
 
 /** Streaming ingestion into the snapshot table: exactly-once per-batch
   * commits sharing the batch ExtractJob's layout/lineage schema, replay
   * idempotence, incremental restarts. */
-class StreamingTableSpec extends AnyFunSuite {
+class StreamingTableSpec extends AnyFunSuite with TimeLimits {
+
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private lazy val spark = SparkTestBase.spark
 
@@ -142,7 +146,9 @@ class StreamingTableSpec extends AnyFunSuite {
     StreamingExtract.commitStreamBatch(table, batch, "s", 0L)
     table.readVisible(spark).select("task_id").collect().map(_.getString(0))
       .foreach(table.deleteTask)
-    table.compact(spark) // must not crash on schema inference of the empty dir
+    // must not crash on schema inference of the empty dir, nor hang on a
+    // lineage observation over zero rows
+    failAfter(Span(120, Seconds))(table.compact(spark))
     assert(table.tombstones.isEmpty, "applied tombstones fold away")
     // the compacted table has no data files at all; read() reports that
     // loudly by (pre-existing) contract rather than inventing a schema
