@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Steal.{clean, stealTicks, timeWithSteal}
 import graft.pipeline.GraftSession
 
 /** Driver benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR at
@@ -19,8 +20,6 @@ import graft.pipeline.GraftSession
   * graft.tools.ScalingBench → BENCH.md.
   */
 object Bench {
-
-  private def stealTicks(): Long = graft.core.Steal.stealTicks()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,13 +41,6 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warmup failed (continuing): ${e.getMessage}")
     }
-
-    // shared steal-aware timing predicate (graft.core.Steal): one "clean
-    // window" definition across Bench/ScalingBench/QueryTime (VERDICT r3 #4
-    // tightened the floor 60 -> 20 ticks; the shared object keeps the
-    // tools from forking it again)
-    def timeWithSteal(f: => Unit): (Double, Long) = graft.core.Steal.timeWithSteal(f)
-    def clean(m: (Double, Long)): Boolean = graft.core.Steal.clean(m)
 
     // Per-query: best of 2, plus up to 2 retries when BOTH runs were
     // steal-contaminated; a global retry budget bounds the worst case of a

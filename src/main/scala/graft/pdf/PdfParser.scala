@@ -109,7 +109,7 @@ object PdfParser {
 
   // compiled once: scanObjects calls parseDictKeys per OBJECT and refsIn
   // runs per page — per-call Regex construction was a measurable slice of
-  // the 60µs/doc object-scan stage (PdfProbe)
+  // the 60µs/doc object-scan stage (measured in the round-3 PDF work, SURVEY.md §11.6)
   private val DictKeyRe = "/([A-Za-z0-9]+)\\s*(/[A-Za-z0-9]+|\\d+(?:\\s+0\\s+R)?|\\[[^\\]]*\\])".r
   private val RefListRe = "(\\d+)\\s+0\\s+R".r
   private val RefFirstRe = "^(\\d+)\\s+0\\s+R".r
@@ -156,11 +156,12 @@ object PdfParser {
     *
     * Single fused pass: the former tokenize-then-fold design built a boxed
     * `Vector[Tok]` (a case-class allocation per number/name/string) that
-    * PdfProbe measured at ~180us/doc -- the interpreter only ever needs the
-    * numeric operand list, the FIRST string/name/array operand, and whether
-    * the LAST operand was a number, so those are tracked directly in
-    * locals. Token-boundary rules, escape handling, and operator semantics
-    * are unchanged (AdversarialGoldenSpec/FuzzSpec + pdf content shas in
+    * cost ~180us/doc (round-3 PDF work, SURVEY.md §11.6) -- the
+    * interpreter only ever needs the numeric operand list, the FIRST
+    * string/name/array operand, and whether the LAST operand was a number,
+    * so those are tracked directly in locals. Token-boundary rules, escape
+    * handling, and operator semantics are unchanged
+    * (AdversarialGoldenSpec/FuzzSpec + pdf content shas in
     * x_extract_hashes pin them). */
   def interpret(stream: String): Vector[Run] = {
     val runs = Vector.newBuilder[Run]
@@ -293,7 +294,7 @@ object PdfParser {
   private final case class Line(y: Float, runs: Vector[Run]) {
     // vals, not defs: layout's merge loops re-read size/bold/x per
     // neighbor comparison — recomputing max/forall over runs each call was
-    // part of the measured layout cost (PdfProbe)
+    // part of the measured layout cost (round-3 PDF work, SURVEY.md §11.6)
     val x: Float = runs.head.x
     // single loop for bold/size/xs (was forall + boxed map.max + map)
     val xs: Array[Float] = new Array[Float](runs.length)
@@ -318,7 +319,8 @@ object PdfParser {
     if (runs.isEmpty) return (Vector.empty, None)
 
     // cluster into lines by y (tolerance 1pt). Manual grouping replaces
-    // groupBy (PdfProbe: layout was 226us/doc, mostly collection churn);
+    // groupBy (layout measured 226us/doc, mostly collection churn, in the
+    // round-3 PDF work, SURVEY.md §11.6);
     // cluster emission order is irrelevant — lines re-sort by -y below and
     // cross-cluster y ties are impossible (distinct rounded keys imply
     // distinct head y), so the sort is order-total.

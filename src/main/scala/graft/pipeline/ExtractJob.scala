@@ -7,8 +7,23 @@ import graft.table.LineageTable
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The resumable extraction job: pages → (latest-crawl dedup) → deterministic
-  * url-hash buckets → per-wave extract + commit → snapshot.
+/** The resumable extraction job: pages → latest-crawl dedup → deterministic
+  * url-hash buckets → staged input → per-wave extract + commit → snapshot.
+  *
+  * Dedup is an exact window over the url keeping the max-`warc_ts` capture,
+  * applied before extraction (it shuffles raw payloads once; on a pages
+  * table bucketed by url it degenerates to a map-side window).
+  *
+  * Staging: with more than one wave, the deduped, bucket-partitioned input
+  * is written once to parquet under `root/_stage/runId` before the wave
+  * loop. Without it every wave would re-scan the FULL pages input
+  * (`_bucket` is computed, so nothing prunes) and re-shuffle raw payloads
+  * for the dedup window: at 100 TB that is `numWaves` full-table
+  * scans+shuffles. With it the dedup shuffle happens once and each wave's
+  * `.where(_bucket isin ...)` is a partition-pruned read of ~1/numWaves of
+  * the data. It amortizes at 2+ waves; a resumed run reuses a completed
+  * staging (_SUCCESS + fingerprint), and the dir is deleted after the
+  * final snapshot commit.
   *
   * Commit protocol (north rule "checkpointed resume"):
   *  - work unit = url-hash bucket (stable across runs/partitionings — NEVER
@@ -30,26 +45,13 @@ import org.apache.spark.sql.functions._
   *  - after the last wave, a snapshot manifest is committed atomically.
   *
   * Scale notes: buckets give the resume granularity (64 default here;
-  * thousands at 100 TB so a lost wave is bounded); within a wave the skew
-  * repartitioner spreads size classes uniformly across cores, and AQE
-  * handles residual imbalance. The only shuffle per wave is that one
-  * repartition — extraction itself is map-side.
+  * thousands at 100 TB so a lost wave is bounded); within a wave, fine
+  * input splits and dynamic task scheduling spread the work, and AQE
+  * handles residual imbalance. The only shuffle per wave moves the
+  * extracted results into bucket-aligned files — extraction itself is
+  * map-side.
   */
 object ExtractJob {
-
-  /** Latest-crawl dedup strategy:
-    *  - `WindowDedup`: exact pre-extraction window over the url — shuffles
-    *    raw payloads once (the right choice when the pages table is
-    *    bucketed by url, where it degenerates to a map-side window);
-    *  - `PostDedup`: extract everything, keep the max-warc_ts result per
-    *    url — no payload shuffle at all; wasted kernel work equals the
-    *    duplicate fraction (the right choice for low-dup crawl deltas on
-    *    unbucketed tables);
-    *  - `NoDedup`: input already deduplicated. */
-  sealed trait DedupStrategy
-  case object WindowDedup extends DedupStrategy
-  case object PostDedup extends DedupStrategy
-  case object NoDedup extends DedupStrategy
 
   final case class Config(
       root: String,
@@ -57,20 +59,7 @@ object ExtractJob {
       numBuckets: Int = 64,
       bucketsPerWave: Int = 16,
       options: ConversionOptions = ConversionOptions(),
-      dedup: DedupStrategy = WindowDedup,
       timeoutMs: Long = ExtractKernel.DefaultTimeoutMs,
-      /** Stage the deduped, bucket-partitioned input to parquet before the
-        * wave loop (skipped when a single wave covers everything). Without
-        * staging, every wave re-scans the FULL pages input — `_bucket` is
-        * computed, so nothing prunes — and WindowDedup re-shuffles raw
-        * payloads once per wave: at 100 TB that is `numWaves` full-table
-        * scans+shuffles. With staging the dedup shuffle happens once, and
-        * each wave's `.where(_bucket isin ...)` becomes a partition-pruned
-        * read of ~1/numWaves of the data. Cost: one full write of the
-        * (deduped) input under `root/_stage/runId` — amortizes immediately
-        * at 2+ waves; a resumed run reuses a completed staging (_SUCCESS),
-        * and the dir is deleted after the final snapshot commit. */
-      stageInput: Boolean = true,
       /** Commit the run as an APPEND snapshot (merge-on-read) instead of a
         * replacing one: existing rows stay visible and re-extracted urls
         * resolve latest-wins via [[LineageTable.readLatest]]. The recrawl
@@ -91,15 +80,8 @@ object ExtractJob {
     import spark.implicits._
     val table = new LineageTable(cfg.root, cfg.numBuckets)
 
-    val deduped: Dataset[Page] = cfg.dedup match {
-      case WindowDedup =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy($"url").orderBy($"warc_ts".desc)
-        pages.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn").as[Page]
-      case PostDedup | NoDedup => pages
-    }
-
-    val withBucket = deduped
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"url").orderBy($"warc_ts".desc)
+    val withBucket = pages.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
       .withColumn("_bucket", pmod(xxhash64($"url"), lit(cfg.numBuckets)).cast("int"))
 
     val done = table.doneBuckets(cfg.runId)
@@ -117,10 +99,10 @@ object ExtractJob {
     val rerun = waves.flatten.toSet
 
     // resume-config guard, staging or not: done-markers written under one
-    // (numBuckets, dedup) are lies under another — numBuckets changes the
-    // url→bucket map, dedup changes what a bucket's rows mean
-    val cfgFp: Map[String, Any] =
-      Map("num_buckets" -> cfg.numBuckets, "dedup" -> cfg.dedup.toString)
+    // numBuckets are lies under another — it changes the url→bucket map.
+    // Keys are checked one way (requested ⊆ recorded), so a CONFIG.json
+    // from an older run that also recorded "dedup" still matches.
+    val cfgFp: Map[String, Any] = Map("num_buckets" -> cfg.numBuckets)
     val cfgFile = java.nio.file.Paths.get(cfg.root, "_checkpoint", cfg.runId, "CONFIG.json")
     if (java.nio.file.Files.exists(cfgFile)) {
       val prev = graft.core.Json.parse(new String(
@@ -135,7 +117,7 @@ object ExtractJob {
         graft.core.Json.write(cfgFp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
-    // stage once, prune per wave (see Config.stageInput). An existing
+    // stage once, prune per wave (see the class doc). An existing
     // staging is ALWAYS reused on resume — even with one wave left, the
     // remaining buckets must extract from the same pinned input as the
     // completed ones, not from a possibly-drifted live input.
@@ -148,15 +130,14 @@ object ExtractJob {
       java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS")) &&
         java.nio.file.Files.exists(fpFile)
     val bucketed: DataFrame =
-      if (cfg.stageInput && (waves.length > 1 || stagingComplete)) {
+      if (waves.length > 1 || stagingComplete) {
         // A runId pins its staged INPUT DATA immutably by design: completed
         // buckets were extracted from the staged snapshot, so a resume must
         // not silently mix a drifted live input mid-run. A resume whose
-        // staging SCHEMA disagrees fails loudly (numBuckets/dedup are
-        // already guarded by CONFIG.json above).
+        // staging SCHEMA disagrees fails loudly (numBuckets is already
+        // guarded by CONFIG.json above).
         val fp: Map[String, Any] = Map(
           "num_buckets" -> cfg.numBuckets,
-          "dedup" -> cfg.dedup.toString,
           "schema" -> withBucket.schema.catalogString,
         )
         if (!stagingComplete) {
@@ -196,18 +177,7 @@ object ExtractJob {
       // for pathological inputs (multi-GB blobs). Measured on this box:
       // payload-shuffle plan = 0.55 scaling efficiency 8→32 cores;
       // this plan = 0.87 (see BENCH.md).
-      val extracted = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
-      val postDeduped = cfg.dedup match {
-        case PostDedup =>
-          // duplicates of a url always share its bucket, so per-wave window
-          // dedup over results is exact — and shuffles only extracted
-          // output, never raw payloads
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy($"url").orderBy($"warc_ts".desc)
-          extracted.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
-        case _ => extracted.toDF()
-      }
-      val results = postDeduped
+      val results = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
         .withColumn("_bucket", pmod(xxhash64($"url"), lit(cfg.numBuckets)).cast("int"))
 
       val slots = spark.sparkContext.defaultParallelism

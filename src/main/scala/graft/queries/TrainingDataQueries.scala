@@ -1166,7 +1166,7 @@ object TrainingDataQueries {
     * per-term branches don't re-tokenize the corpus (the xHostRank64
     * lesson). (r6 probe note: a lead-window-over-postings rewrite — one
     * pass, no checkpoint, no joins — measured 0.331 s vs 0.308 s for this
-    * shape in a same-session steal-clean A/B (R6Probe): the per-doc
+    * shape in a same-session steal-clean A/B (OPTIMIZATION_r06.md): the per-doc
     * window sort costs more than the checkpoint + equi-joins it saves.
     * Reverted; both shapes shuffle only postings at any scale.) */
   def qPhraseSearch(spark: SparkSession, dir: String): DataFrame =

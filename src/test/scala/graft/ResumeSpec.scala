@@ -110,11 +110,11 @@ class ResumeSpec extends AnyFunSuite with TimeLimits {
     intercept[Kill] {
       ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
     }
-    // a resume that silently extracted under a different dedup mode /
-    // bucket count would produce a table whose done-markers and partition
-    // layout lie — the CONFIG guard fails loud, staged or not
+    // a resume that silently extracted under a different bucket count
+    // would produce a table whose done-markers and partition layout lie —
+    // the CONFIG guard fails loud, staged or not
     val ex = intercept[IllegalArgumentException] {
-      ExtractJob.run(spark, pagesDs, cfg.copy(dedup = ExtractJob.PostDedup))
+      ExtractJob.run(spark, pagesDs, cfg.copy(numBuckets = 8))
     }
     assert(ex.getMessage.contains("different config"), ex.getMessage)
     // identical config resumes normally
@@ -130,19 +130,6 @@ class ResumeSpec extends AnyFunSuite with TimeLimits {
     val table = new LineageTable(root, 8)
     val plan = table.read(spark).where("_bucket = 3").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(_bucket"), s"no partition pruning in:\n$plan")
-  }
-
-  test("PostDedup strategy: same final table as WindowDedup, no payload shuffle") {
-    val rootW = freshRoot()
-    val rootP = freshRoot()
-    ExtractJob.run(spark, pagesDs, ExtractJob.Config(rootW, "w", numBuckets = 8, bucketsPerWave = 8))
-    ExtractJob.run(spark, pagesDs, ExtractJob.Config(rootP, "p", numBuckets = 8, bucketsPerWave = 8,
-      dedup = ExtractJob.PostDedup))
-    val a = new LineageTable(rootW, 8).read(spark)
-      .select("url", "task_id", "status").collect().map(_.toString).sorted
-    val b = new LineageTable(rootP, 8).read(spark)
-      .select("url", "task_id", "status").collect().map(_.toString).sorted
-    assert(a.sameElements(b), "dedup strategies must agree on the final table")
   }
 
   test("per-row timeout guard produces failed rows, not job kills") {
